@@ -82,43 +82,23 @@ SNAPSHOT_PROPS_NAME = "_snapshot_props.json"
 # otherwise pay a pruned-but-nonzero diff on.
 DATA_CHANGE_PROP = "data_change"
 
-SNAPSHOT_IDENTITY_MODES = ("auto", "manifest", "inode")
-
 
 class Catalog:
     """A named-table namespace over a directory of Parquet datasets.
 
-    ``snapshot_identity`` picks how shared-file pruning (``table_changes``
-    and friends) proves two snapshot files identical:
-
-    - ``auto`` (default): manifest identity when both snapshots carry a
-      manifest, hard-link inode identity otherwise (pre-manifest tables).
-    - ``manifest``: manifest-only — never consults inodes; snapshots
-      without manifests are diffed unpruned (correct, just unoptimized).
-      This is the object-storage posture: on S3/GCS there are no inodes.
-    - ``inode``: legacy hard-link identity only (POSIX filesystems).
-
-    Defaults from ``$AGOL_SPARK_SNAPSHOT_IDENTITY`` when unset, so a full
-    workload sweep can be flipped to manifest-only without code changes.
+    Shared-file pruning (``table_changes`` and friends) proves two
+    snapshot files identical from their manifest ``(file_id, size)``
+    entries only — the object-storage posture (no inodes on S3/GCS).
+    Snapshots without a format-2 manifest are diffed unpruned: correct,
+    just unoptimized, and their next commit writes one.
     """
 
-    def __init__(
-        self, spark: SparkSession, root: str,
-        snapshot_identity: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.snapshot_identity = snapshot_identity or os.environ.get(
-            "AGOL_SPARK_SNAPSHOT_IDENTITY", "auto"
-        )
-        if self.snapshot_identity not in SNAPSHOT_IDENTITY_MODES:
-            raise ValueError(
-                f"snapshot_identity must be one of {SNAPSHOT_IDENTITY_MODES},"
-                f" got {self.snapshot_identity!r}"
-            )
         self._ns_cols: dict[str, list[str]] = {}
         # diagnostics of the LAST shared-file diff this catalog ran:
-        # {"mode": "chunk"|"full", "chunks_total", "chunks_parsed"} —
+        # {"mode": "chunk", "chunks_total", "chunks_parsed"} —
         # how scale tests pin the O(dirty chunks) metadata-read claim
         self.last_diff_stats: dict = {}
         # last executor-fan-out failure that fell back to the serial
@@ -295,18 +275,22 @@ class Catalog:
 
     def write_local(self, table, name: str, mode: str = "error") -> str:
         """Atomically materialize a DRIVER-RESIDENT ``pyarrow.Table`` as
-        catalog table ``name`` — a single parquet file committed with the
-        same tmp-write + ``os.replace`` discipline as the index meta
-        sidecars, and zero Spark jobs.
+        catalog table ``name`` — a single parquet file committed by
+        tmp-write + ``os.replace``, with zero Spark jobs. The one writer
+        for driver-resident tables: index meta rows (``__lsh_meta``,
+        ``__ivfpq_meta``) and IVF-PQ model state (pivots, codebook).
 
-        For broadcast-sized model/metadata state the driver already
-        holds (IVF pivots, PQ codebooks: ≤ k×M rows): a ``Catalog.write``
-        of such state pays a full Spark job + task-commit latency to
-        write a few KB that just made the round trip driver → executors
-        → parquet (guide §1.2 — don't compute things you throw away;
-        §6 metadata costs). Reads are unchanged: ``Catalog.table`` and
-        pyarrow's dataset reader both handle single-file tables, exactly
-        like the existing ``__lsh_meta``/``__ivfpq_meta`` sidecars.
+        For broadcast-sized state the driver already holds (≤ k×M rows),
+        a ``Catalog.write`` pays a full Spark job + task-commit latency
+        to write a few KB that just made the round trip driver →
+        executors → parquet (guide §1.2 — don't compute things you throw
+        away; §6 metadata costs). ``Catalog.table`` and pyarrow's dataset
+        reader both read single-file tables.
+
+        A directory-shaped predecessor (an older layout of the same
+        table) is renamed aside, not deleted, until the replace lands: a
+        failed replace renames it back, so the old table still reads —
+        the rollback discipline of :meth:`_swap_in`.
 
         NOT for data-sized tables: no manifest, no commit id, no
         carryover — anything that needs snapshot machinery goes through
@@ -320,9 +304,19 @@ class Catalog:
         os.makedirs(self.root, exist_ok=True)
         tmp = f"{target}.__tmp_{uuid.uuid4().hex}"
         papq.write_table(table, tmp)
-        if os.path.isdir(target):  # replace a directory-shaped predecessor
-            shutil.rmtree(target)
-        os.replace(tmp, target)
+        aside = None
+        if os.path.isdir(target):  # os.replace cannot overwrite a directory
+            aside = f"{target}.__old_{uuid.uuid4().hex}"
+            os.rename(target, aside)
+        try:
+            os.replace(tmp, target)
+        except OSError:
+            if aside:
+                os.rename(aside, target)  # roll back
+            os.remove(tmp)
+            raise
+        if aside:
+            shutil.rmtree(aside, ignore_errors=True)
         self._ns_cols.pop(target, None)
         return target
 
@@ -372,23 +366,18 @@ class Catalog:
 
     # -- snapshot manifests (object-storage-portable file identity) ---------
     #
-    # Two on-disk formats, one reader:
-    #
-    # * format 1 (legacy, pre-r9): ``_manifest.json`` = {"files": {...}} —
-    #   ONE monolithic JSON naming every data file, rewritten in full on
-    #   every commit. Fine to O(10^4) files; at the O(10^5-10^6) files a
-    #   real 100 TB table carries, an O(total) driver-side rewrite per
-    #   commit is the metadata bottleneck (the data-file work is already
-    #   O(changed files) via carryover).
-    # * format 2 (r9+): ``_manifest.json`` = a MANIFEST LIST
-    #   {"format": 2, "manifests": [{"name", "count"}, ...]} pointing at
-    #   CHUNK manifests ``_manifest-<id>.json`` ({"files": {...}},
-    #   <= _manifest_chunk_size() entries each, relpath-sorted). Chunks
-    #   are immutable once written; a commit that carries a chunk's whole
-    #   entry set forward unchanged REUSES the chunk by hard link (O(1))
-    #   and writes fresh chunks only for new/changed entries — the
-    #   Iceberg manifest-list shape, making manifest bytes written per
-    #   commit O(delta + dirty chunks), not O(table).
+    # One on-disk format (format 2): ``_manifest.json`` is a MANIFEST LIST
+    # {"format": 2, "manifests": [{"name", "count"}, ...]} pointing at
+    # CHUNK manifests ``_manifest-<id>.json`` ({"files": {...}},
+    # <= _manifest_chunk_size() entries each, relpath-sorted). Chunks are
+    # immutable once written; a commit that carries a chunk's whole entry
+    # set forward unchanged REUSES the chunk by hard link (O(1)) and writes
+    # fresh chunks only for new/changed entries — the Iceberg
+    # manifest-list shape, making manifest bytes written per commit
+    # O(delta + dirty chunks), not O(table). Anything else at
+    # ``_manifest.json`` (a pre-r9 monolith, a torn list) reads as "no
+    # manifest": the snapshot diffs unpruned and its next commit writes
+    # format 2.
     #
     # All manifest files are "_"-prefixed siblings of the data, so every
     # data-file walk/listdir filter in this module excludes them for free.
@@ -470,16 +459,14 @@ class Catalog:
     ) -> tuple[dict[str, dict], list[tuple[str, dict]] | None]:
         """(merged manifest, chunk list) reading the snapshot's manifest
         layout ONCE — the commit paths need both (carried ids + chunk
-        reuse) and must not parse O(table) JSON twice per commit. The
-        chunk list is None for legacy format-1 / unmanifested snapshots
-        (nothing reusable)."""
+        reuse) and must not parse O(table) JSON twice per commit.
+        ``({}, None)`` for unmanifested or torn snapshots (nothing
+        reusable)."""
         chunks = self._manifest_chunks(path)
-        if chunks is not None:
-            merged: dict[str, dict] = {}
-            for _, part in chunks:
-                merged.update(part)
-            return merged, chunks
-        return self.snapshot_manifest(path) or {}, None
+        merged: dict[str, dict] = {}
+        for _, part in chunks or ():
+            merged.update(part)
+        return merged, chunks
 
     def _write_manifest(
         self,
@@ -561,82 +548,11 @@ class Catalog:
                 sort_keys=True,
             )
 
-    def _manifest_chunks(
-        self, path: str
-    ) -> list[tuple[str, dict[str, dict]]] | None:
-        """``(absolute chunk path, entries)`` per chunk manifest of a
-        format-2 snapshot — the unit of commit-to-commit reuse. None for
-        legacy format-1 / unmanifested snapshots (nothing reusable: a
-        monolithic manifest is rewritten, upgrading it to format 2)."""
-        if not os.path.isdir(path):
-            return None
-        try:
-            with open(os.path.join(path, MANIFEST_NAME)) as fh:
-                head = json.load(fh)
-        except (OSError, ValueError):
-            return None
-        if head.get("format") != 2:
-            return None
-        out: list[tuple[str, dict[str, dict]]] = []
-        try:
-            for m in head["manifests"]:
-                cp = os.path.join(path, m["name"])
-                with open(cp) as fh:
-                    out.append((cp, json.load(fh)["files"]))
-        except (OSError, KeyError, ValueError, TypeError):
-            return None  # torn manifest: no reuse, disk truth prevails
-        return out
-
-    def snapshot_manifest(self, path: str) -> dict[str, dict] | None:
-        """The snapshot's manifest (relpath → {file_id, size}), or None
-        for single-file tables / snapshots committed before manifests.
-        Reads both formats: legacy monolithic and the r9 manifest list
-        (chunks merged). A torn format-2 layout (list without a chunk)
-        reads as None — callers fall back to unpruned reads, which costs
-        performance but never rows."""
-        if not os.path.isdir(path):
-            return None
-        try:
-            with open(os.path.join(path, MANIFEST_NAME)) as fh:
-                head = json.load(fh)
-        except (OSError, ValueError):
-            return None
-        if "files" in head:  # format 1 (legacy monolith)
-            files = head["files"]
-            return files if isinstance(files, dict) else None
-        chunks = self._manifest_chunks(path)
-        if chunks is None:
-            return None
-        merged: dict[str, dict] = {}
-        for _, part in chunks:
-            merged.update(part)
-        return merged
-
-    def _manifest_identities(
-        self, path: str
-    ) -> list[tuple[tuple | None, str]] | None:
-        """(identity, file) per on-disk data file, identity from the
-        manifest — or None when the snapshot has no manifest. Disk is the
-        source of truth: a file absent from the manifest or whose size
-        disagrees gets identity None (never pruned), so external appends
-        can cost performance but never rows."""
-        man = self.snapshot_manifest(path)
-        if man is None:
-            return None
-        out: list[tuple[tuple | None, str]] = []
-        for rp, size in self._list_with_sizes(path):
-            e = man.get(rp)
-            if e is not None and e.get("size") == size:
-                out.append(((e["file_id"], e["size"]), os.path.join(path, rp)))
-            else:
-                out.append((None, os.path.join(path, rp)))
-        return out
-
     def _chunk_manifest_list(self, path: str) -> list[dict] | None:
-        """The raw format-2 manifest-list entries (``{"name", "count"}``
-        per chunk — counts let the diff verify that a snapshot's
-        unknown-file population is fully accounted by its shared chunks
-        without parsing them). None for legacy/unmanifested/torn."""
+        """The raw manifest-list entries (``{"name", "count"}`` per chunk
+        — counts let the diff verify that a snapshot's unknown-file
+        population is fully accounted by its shared chunks without
+        parsing them). None for unmanifested/torn snapshots."""
         if not os.path.isdir(path):
             return None
         try:
@@ -648,8 +564,36 @@ class Catalog:
             if any("name" not in m for m in out):
                 return None
             return out
-        except (OSError, KeyError, TypeError, ValueError):
+        except (OSError, AttributeError, KeyError, TypeError, ValueError):
             return None
+
+    def _manifest_chunks(
+        self, path: str
+    ) -> list[tuple[str, dict[str, dict]]] | None:
+        """``(absolute chunk path, entries)`` per chunk manifest of a
+        snapshot — the unit of commit-to-commit reuse. None for
+        unmanifested or torn snapshots (nothing reusable)."""
+        listed = self._chunk_manifest_list(path)
+        if listed is None:
+            return None
+        out: list[tuple[str, dict[str, dict]]] = []
+        try:
+            for m in listed:
+                cp = os.path.join(path, m["name"])
+                with open(cp) as fh:
+                    out.append((cp, json.load(fh)["files"]))
+        except (OSError, KeyError, ValueError, TypeError):
+            return None  # torn manifest: no reuse, disk truth prevails
+        return out
+
+    def snapshot_manifest(self, path: str) -> dict[str, dict] | None:
+        """The snapshot's manifest (relpath → {file_id, size}, chunks
+        merged), or None for single-file tables and snapshots without a
+        format-2 manifest. A torn layout (list without a chunk) reads as
+        None — callers fall back to unpruned reads, which costs
+        performance but never rows."""
+        man, chunks = self._manifest_with_chunks(path)
+        return None if chunks is None else man
 
     def _parse_chunks(
         self, path: str, names: list[str]
@@ -669,7 +613,7 @@ class Catalog:
     def _chunk_pruned_diff(
         self, old_path: str, new_path: str
     ) -> tuple[list[str], list[str]] | None:
-        """Format-2 fast path of :meth:`_unshared_snapshot_files`: diff
+        """The manifest diff behind :meth:`_unshared_snapshot_files`: diff
         two snapshots' manifests parsing ONLY the chunk manifests NOT
         shared between them — O(dirty chunks) driver JSON instead of
         O(table) (VERDICT r9 item 1: at 10^6-7 files the full parse is
@@ -691,7 +635,7 @@ class Catalog:
 
         Per-file disk reconciliation (disk stays the source of truth):
         parsed entries prune on matching (file_id, size) across sides,
-        exactly like the full path; unknown files prune only when
+        exactly like a full manifest parse; unknown files prune only when
         present on BOTH sides with EQUAL sizes AND accounted by the
         shared chunks — accounting verified for free through the
         manifest-list per-chunk counts (each side's unknown population
@@ -699,12 +643,12 @@ class Catalog:
         membership parse on any mismatch (ADVICE r10: an injected file
         then reads instead of pruning — the tamper-suspected path pays
         the parse, the steady state never does); the residual
-        divergence from the full path is the equal-count SWAP corner
+        divergence from a full parse is the equal-count SWAP corner
         (one injected file impersonating one vanished shared member,
         same names and sizes on both sides), i.e. strictly narrower
         than the previous corner of
         same-named equal-size different-content files injected into
-        BOTH snapshot directories (the full path would read those; see
+        BOTH snapshot directories (a full parse would read those; see
         the module-level external-modification caveat).
 
         Records ``self.last_diff_stats`` (chunks_total/chunks_parsed/
@@ -815,43 +759,11 @@ class Catalog:
     ) -> tuple[list[str] | None, list[str] | None]:
         """The two snapshots' file lists with provably-shared files
         removed from BOTH sides — the shared-file pruning behind
-        ``table_changes``. Identity per ``snapshot_identity``: manifest
-        (file_id, size) pairs, falling back to (st_dev, st_ino) hard-link
-        identity in ``auto`` mode when either side predates manifests.
-        ``(None, None)`` means no pruning evidence — read both snapshots
-        in full (correct, unpruned).
-
-        Format-2 snapshots take :meth:`_chunk_pruned_diff` — same
-        result, O(dirty chunks) driver JSON instead of O(table)."""
-        ofs = nfs = None
-        if self.snapshot_identity in ("auto", "manifest"):
-            fast = self._chunk_pruned_diff(old_path, new_path)
-            if fast is not None:
-                return fast
-            ofs = self._manifest_identities(old_path)
-            nfs = self._manifest_identities(new_path)
-            if ofs is not None and nfs is not None:
-                self.last_diff_stats = {"mode": "full"}
-        if ofs is None or nfs is None:
-            if self.snapshot_identity == "manifest":
-                return None, None
-
-            def _inos(files: list[str]) -> list[tuple[tuple, str]]:
-                out = []
-                for f in files:
-                    st = os.stat(f)  # one stat per file per side
-                    out.append(((st.st_dev, st.st_ino), f))
-                return out
-
-            ofs = _inos(self._snapshot_files(old_path))
-            nfs = _inos(self._snapshot_files(new_path))
-        shared = {i for i, _ in ofs if i is not None} & {
-            i for i, _ in nfs if i is not None
-        }
-        return (
-            [f for i, f in ofs if i not in shared],
-            [f for i, f in nfs if i not in shared],
-        )
+        ``table_changes``, by manifest ``(file_id, size)`` identity
+        (:meth:`_chunk_pruned_diff`). ``(None, None)`` when either side
+        lacks a readable manifest: read both snapshots in full (correct,
+        unpruned)."""
+        return self._chunk_pruned_diff(old_path, new_path) or (None, None)
 
     def _swap_in(
         self, staged: str, name: str, keep_versions: int,
@@ -1718,13 +1630,6 @@ class Catalog:
         out.append(_stat(self.path(name), None))
         return out
 
-    def _snapshot_files(self, path: str) -> list[str]:
-        """Data files of a snapshot directory (or the file itself) —
-        names only, no stats (the inode fallback stats them itself)."""
-        if os.path.isfile(path):
-            return [path]
-        return [os.path.join(path, rp) for rp in self._list_names(path)]
-
     def _read_snapshot(self, path: str, files: list[str] | None = None) -> DataFrame:
         """Scan a snapshot (optionally a file subset) with ``table()``'s
         type semantics — TIMESTAMP(NANOS) columns convert to µs — so two
@@ -1791,9 +1696,8 @@ class Catalog:
         manifest ``file_id`` forward — a file present in both snapshots
         under the same (file_id, size) is the same immutable committed
         file, so its rows can emit no changes and are excluded from BOTH
-        join sides before any byte is read (``snapshot_identity`` picks
-        manifest vs legacy hard-link-inode evidence; manifests are the
-        object-storage-portable path — no inodes on S3/GCS). After a
+        join sides before any byte is read (manifest identity is the
+        object-storage-portable evidence — no inodes on S3/GCS). After a
         pruned upsert touching 0.1% of a 100 TB table, the feed scans
         only the rewritten files, not two full snapshots. Sound under
         the unique-key contract the keyed writes enforce (a key living
@@ -1848,10 +1752,10 @@ class Catalog:
     ) -> DataFrame:
         """:meth:`table_changes` addressed by immutable tags instead of
         version numbers — "what changed since the snapshot that trained
-        model X". Tags pin snapshots by hard link, so the shared-inode
-        pruning is at its strongest here: only files rewritten since the
-        tag was minted are ever opened. ``to_tag=None`` diffs against
-        the current table."""
+        model X". Tags pin snapshots by hard link and carry their file
+        identities, so the shared-file pruning is at its strongest here:
+        only files rewritten since the tag was minted are ever opened.
+        ``to_tag=None`` diffs against the current table."""
         old_path = self._tag_path(name, from_tag)
         if not os.path.exists(old_path):
             raise TableNotFoundError(
@@ -1885,7 +1789,7 @@ class Catalog:
         state (insert/delete/update images). The pre-publish review for
         the branch workflow: audit exactly the rows a
         :meth:`publish_branch` would land, not the whole table. The
-        branch forked by hard link, so the shared-inode pruning opens
+        branch forked by hard link, so the shared-file pruning opens
         only files the branch has rewritten since the fork."""
         src_path = self.path(name)
         if not os.path.exists(src_path):

@@ -36,7 +36,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from agol_pandas_spark.errors import ConvergenceError, LshIndexParamError
+from agol_pandas_spark.errors import (
+    ConvergenceError,
+    LshIndexParamError,
+    TableNotFoundError,
+)
 from agol_pandas_spark.operators.ranks import _persist_bounded
 from agol_pandas_spark.functions.text import (
     portable_hash60,
@@ -424,20 +428,12 @@ def write_lsh_index(
     # different band layout joins on incompatible band_key values and
     # silently misses near-duplicates. probe_lsh_index validates against
     # this one-row table (and infers defaults from it when not given).
-    # Written driver-side with pyarrow — one row of three ints does not
-    # justify a Spark job — but at the catalog path, so catalog.table()
-    # reads it like any other table.
-    import os
-    import shutil
-    import uuid
-
+    # Written driver-side — one row of three ints does not justify a
+    # Spark job — but at the catalog path, so catalog.table() reads it
+    # like any other table.
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
-    meta_path = catalog.path(_lsh_meta_name(name))
-    os.makedirs(catalog.root, exist_ok=True)
-    tmp = f"{meta_path}.__tmp_{uuid.uuid4().hex}"
-    papq.write_table(
+    catalog.write_local(
         pa.table(
             {
                 "shingle_size": pa.array([shingle_size], pa.int32()),
@@ -445,11 +441,9 @@ def write_lsh_index(
                 "band_size": pa.array([band_size], pa.int32()),
             }
         ),
-        tmp,
+        _lsh_meta_name(name),
+        mode="overwrite",
     )
-    if os.path.isdir(meta_path):  # replace a directory-shaped predecessor
-        shutil.rmtree(meta_path)
-    os.replace(tmp, meta_path)
     return path
 
 
@@ -467,51 +461,32 @@ def _resolve_lsh_params(
     """Resolve (shingle_size, num_hashes, band_size) for a probe against
     index ``name``: stored parameters win when the caller passed None;
     explicit values that contradict the stored ones raise
-    :class:`LshIndexParamError`. Indexes written before the meta table
-    existed fall back to the signature-column count in the index schema
-    (num_hashes is recoverable there; shingle_size is not, so explicit/
-    default values are trusted for it)."""
-    stored: dict[str, int] | None = None
-    if catalog.exists(_lsh_meta_name(name)):
-        # read driver-side (pyarrow): one row of ints, no Spark job on the
-        # probe path; pyarrow's dataset reader skips _/.-prefixed files,
-        # so both file- and directory-shaped meta tables read fine
-        import pyarrow.parquet as papq
+    :class:`LshIndexParamError`. An index without its meta table raises
+    ``TableNotFoundError`` — :func:`write_lsh_index` writes both."""
+    if not catalog.exists(_lsh_meta_name(name)):
+        raise TableNotFoundError(
+            f"no LSH index meta for {name!r} under {catalog.root} — "
+            "build it with write_lsh_index"
+        )
+    # read driver-side (pyarrow): one row of ints, no Spark job on the
+    # probe path; pyarrow's dataset reader skips _/.-prefixed files, so
+    # both file- and directory-shaped meta tables read fine
+    import pyarrow.parquet as papq
 
-        row = papq.read_table(catalog.path(_lsh_meta_name(name))).to_pylist()[0]
-        stored = {
-            "shingle_size": row["shingle_size"],
-            "num_hashes": row["num_hashes"],
-            "band_size": row["band_size"],
-        }
-    else:
-        # legacy index: recover num_hashes from the mh_* columns
-        idx_cols = catalog.table(name).columns
-        inferred = sum(1 for c in idx_cols if c.startswith("mh_"))
-        if inferred:
-            stored = {"num_hashes": inferred}
-    asked = {
-        "shingle_size": shingle_size,
-        "num_hashes": num_hashes,
-        "band_size": band_size,
-    }
-    resolved: dict[str, int] = {}
-    for key, default in (
-        ("shingle_size", 3),
-        ("num_hashes", len(MINHASH_PARAMS)),
-        ("band_size", 2),
+    row = papq.read_table(catalog.path(_lsh_meta_name(name))).to_pylist()[0]
+    for key, want in (
+        ("shingle_size", shingle_size),
+        ("num_hashes", num_hashes),
+        ("band_size", band_size),
     ):
-        have = stored.get(key) if stored else None
-        want = asked[key]
-        if want is not None and have is not None and want != have:
+        if want is not None and want != row[key]:
             raise LshIndexParamError(
-                f"LSH index {name!r} was built with {key}={have}, but the "
-                f"probe asked for {key}={want}; a mismatched probe would "
+                f"LSH index {name!r} was built with {key}={row[key]}, but "
+                f"the probe asked for {key}={want}; a mismatched probe would "
                 "silently miss near-duplicates. Re-probe with the stored "
                 "parameters (or rebuild the index)."
             )
-        resolved[key] = want if want is not None else (have if have is not None else default)
-    return resolved["shingle_size"], resolved["num_hashes"], resolved["band_size"]
+    return row["shingle_size"], row["num_hashes"], row["band_size"]
 
 
 def probe_lsh_index(

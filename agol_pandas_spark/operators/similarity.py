@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from agol_pandas_spark.errors import TableNotFoundError, VectorIndexParamError
 from agol_pandas_spark.functions.vectors import cosine_similarity
 
 VSCALE = 1_000_000_000  # 10^-9 quantization of per-element products
@@ -1147,8 +1148,6 @@ def _read_model_rows(catalog, name: str, columns: list[str]) -> list[tuple]:
     directory-shaped tables from older builds (pyarrow's dataset reader
     skips the "_"-prefixed manifest/commit metadata). Returns positional
     tuples in ``columns`` order, the shape the Arrow kernels index."""
-    from agol_pandas_spark.errors import TableNotFoundError
-
     if not catalog.exists(name):
         raise TableNotFoundError(
             f"no table {name!r} under {catalog.root}"
@@ -1166,7 +1165,9 @@ def _first_codes_width(catalog, name: str) -> int | None:
     """Length of one stored ``codes`` row, from the first fragment's
     first row — the cross-table layout check, as a driver-side footer+
     page read instead of a ``limit(1).collect()`` Spark job. ``None``
-    for an empty index (nothing to contradict)."""
+    for an empty index (nothing to contradict); a NULL first ``codes``
+    value raises :class:`VectorIndexParamError` — no engine write
+    produces one, and it would silently skip the check."""
     import pyarrow.dataset as ds
 
     head = (
@@ -1176,32 +1177,12 @@ def _first_codes_width(catalog, name: str) -> int | None:
     if head.num_rows == 0:
         return None
     row = head.column("codes")[0].as_py()
-    return None if row is None else len(row)
-
-
-def _pa_type(spark_type):
-    """pyarrow type for the Spark column types model tables carry
-    (ids: integral/string; vectors: arrays of float/double). Returns
-    ``None`` for anything else — callers fall back to a Spark write."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    simple = {
-        T.ByteType: pa.int8(),
-        T.ShortType: pa.int16(),
-        T.IntegerType: pa.int32(),
-        T.LongType: pa.int64(),
-        T.FloatType: pa.float32(),
-        T.DoubleType: pa.float64(),
-        T.StringType: pa.string(),
-    }
-    t = simple.get(type(spark_type))
-    if t is not None:
-        return t
-    if isinstance(spark_type, T.ArrayType):
-        inner = simple.get(type(spark_type.elementType))
-        return pa.list_(inner) if inner is not None else None
-    return None
+    if row is None:
+        raise VectorIndexParamError(
+            f"IVF-PQ index {name!r} has a NULL codes row, so its layout "
+            "cannot be checked against the meta; rebuild the index."
+        )
+    return len(row)
 
 
 def pq_encode(
@@ -1713,12 +1694,8 @@ def write_ivfpq_index(
     concurrent rebuild therefore surfaces as
     :class:`VectorIndexParamError`, never as silently wrong ranks.
     """
-    import os
-    import shutil
-    import uuid
-
     import pyarrow as pa
-    import pyarrow.parquet as papq
+    from pyspark.sql.pandas.types import to_arrow_type
 
     # The two model inputs are broadcast-sized by contract and BOTH get
     # collected to the driver anyway (the codebook for validation + the
@@ -1742,59 +1719,38 @@ def write_ivfpq_index(
             f"pq codebook has {k_found} codes per subspace, caller assumed "
             f"{k_codes} — the flattened LUT would be mis-indexed"
         )
+    # The pivots/codebook model tables are built DRIVER-SIDE from the
+    # rows just collected, and BEFORE anything commits: a column type
+    # Arrow cannot carry raises here, never after the coded table landed.
+    def _model_table(df: DataFrame, cols: tuple, rows: list):
+        return pa.table(
+            {
+                c: pa.array(
+                    [r[i] for r in rows], to_arrow_type(df.schema[c].dataType)
+                )
+                for i, c in enumerate(cols)
+            }
+        )
+
+    pivots_tbl = _model_table(pivots, (pivot_id, vec), pivot_rows)
+    codebook_tbl = _model_table(codebook, ("m", "code", "cent"), cb_rows)
     payload = tuple(payload_cols)
     coded = _assign_encode_arrow(
         corpus.select(F.col(corpus_id), F.col(vec), *payload),
         pivots, C, corpus_id, pivot_id, vec, keep_cols=payload,
         pivot_rows=pivot_rows,
     )
-    # ONE Spark write: the corpus-sized coded table. The pivots/codebook
-    # model tables are written DRIVER-SIDE from the rows just collected
-    # (Catalog.write_local: atomic single-file commit, zero Spark jobs —
-    # previously each paid a full job + task-commit latency AND re-ran
-    # its derivation plan to write a few KB; guide §1.2, §6). The meta
-    # still writes strictly LAST (the crash-consistency contract above),
-    # after all three data/model tables have committed.
+    # ONE Spark write: the corpus-sized coded table. The model tables
+    # and the meta go through Catalog.write_local (atomic single-file
+    # commit, zero Spark jobs — a Spark write would pay a full job +
+    # task-commit latency AND re-run its derivation plan to write a few
+    # KB; guide §1.2, §6). The meta writes strictly LAST (the
+    # crash-consistency contract above), after all three data/model
+    # tables have committed.
     path = catalog.write(coded, name, "overwrite")
-    pid_t = _pa_type(pivots.schema[pivot_id].dataType)
-    vec_t = _pa_type(pivots.schema[vec].dataType)
-    if pid_t is not None and vec_t is not None:
-        catalog.write_local(
-            pa.table(
-                {
-                    pivot_id: pa.array([r[0] for r in pivot_rows], pid_t),
-                    vec: pa.array([r[1] for r in pivot_rows], vec_t),
-                }
-            ),
-            _ivfpq_pivots_name(name), mode="overwrite",
-        )
-    else:  # exotic id/vector type: keep the Spark write path
-        catalog.write(
-            pivots.select(F.col(pivot_id), F.col(vec)),
-            _ivfpq_pivots_name(name), "overwrite",
-        )
-    cb_types = [
-        _pa_type(codebook.schema[c].dataType) for c in ("m", "code", "cent")
-    ]
-    if all(t is not None for t in cb_types):
-        catalog.write_local(
-            pa.table(
-                {
-                    c: pa.array([r[c] for r in cb_rows], t)
-                    for c, t in zip(("m", "code", "cent"), cb_types)
-                }
-            ),
-            _ivfpq_codebook_name(name), mode="overwrite",
-        )
-    else:
-        catalog.write(
-            codebook.select("m", "code", "cent"),
-            _ivfpq_codebook_name(name), "overwrite",
-        )
-    meta_path = catalog.path(_ivfpq_meta_name(name))
-    os.makedirs(catalog.root, exist_ok=True)
-    tmp = f"{meta_path}.__tmp_{uuid.uuid4().hex}"
-    papq.write_table(
+    catalog.write_local(pivots_tbl, _ivfpq_pivots_name(name), "overwrite")
+    catalog.write_local(codebook_tbl, _ivfpq_codebook_name(name), "overwrite")
+    catalog.write_local(
         pa.table(
             {
                 "m_subspaces": pa.array([m_subspaces], pa.int32()),
@@ -1805,11 +1761,9 @@ def write_ivfpq_index(
                 "payload_cols": pa.array([",".join(payload)], pa.string()),
             }
         ),
-        tmp,
+        _ivfpq_meta_name(name),
+        "overwrite",
     )
-    if os.path.isdir(meta_path):
-        shutil.rmtree(meta_path)
-    os.replace(tmp, meta_path)
     return path
 
 
@@ -1823,11 +1777,6 @@ def _resolve_ivfpq_params(
     values that contradict the stored ones raise
     :class:`VectorIndexParamError` (a mismatched probe mis-indexes the
     ADC LUT — silent garbage, never an exception downstream)."""
-    from agol_pandas_spark.errors import (
-        TableNotFoundError,
-        VectorIndexParamError,
-    )
-
     if not catalog.exists(_ivfpq_meta_name(name)):
         raise TableNotFoundError(
             f"no IVF-PQ index meta for {name!r} under {catalog.root} — "
@@ -1901,8 +1850,6 @@ def probe_ivfpq_index(
     )
     codes_width = _first_codes_width(catalog, name)
     if codes_width is not None and codes_width != m_sub:
-        from agol_pandas_spark.errors import VectorIndexParamError
-
         raise VectorIndexParamError(
             f"IVF-PQ index {name!r} codes have {codes_width} "
             f"subspaces but the meta declares {m_sub} — mixed-layout "
@@ -2270,8 +2217,6 @@ def hard_negative_topk_indexed(
     ``label_col`` payload — a silent fallback would quietly lose the
     budget.
     """
-    from agol_pandas_spark.errors import VectorIndexParamError
-
     meta = _resolve_ivfpq_params(catalog, name, None, None)
     m_sub, kc = meta["m_subspaces"], meta["k_codes"]
     corpus_id, pivot_id, vec = meta["corpus_id"], meta["pivot_id"], meta["vec"]

@@ -49,6 +49,7 @@ import base64
 import pickle
 import random
 import time
+import weakref
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
@@ -458,6 +459,18 @@ class _PagedStreamReader(SimpleDataSourceStreamReader):
         return gen()
 
 
+_REGISTERED: weakref.WeakSet = weakref.WeakSet()
+
+
+def _register(spark: SparkSession) -> None:
+    """Register ``agol_paged`` once per session: every re-registration
+    logs a ``DataSourceManager`` WARN, which floods a long-lived
+    session's log when each query build registers again."""
+    if spark not in _REGISTERED:
+        spark.dataSource.register(PagedDataSource)
+        _REGISTERED.add(spark)
+
+
 def read_paged_stream(
     spark: SparkSession,
     client: PagedClient,
@@ -471,7 +484,7 @@ def read_paged_stream(
     catch-up drains so a deep backlog does not pay one checkpoint commit
     per page); pair with ``trigger(availableNow=True)`` for a
     deterministic drain of the current table state."""
-    spark.dataSource.register(PagedDataSource)
+    _register(spark)
     policy = policy or RetryPolicy()
     return (
         spark.readStream.format("agol_paged")
@@ -494,7 +507,7 @@ def read_paged(
     columns: Sequence[str] | None = None,
     limit: int | None = None,
 ) -> DataFrame:
-    """Register the datasource (idempotent) and build the paged scan.
+    """Register the datasource (once per session) and build the paged scan.
 
     ``columns`` is the projection contract (ArcGIS ``outFields``): pushed
     into the client via :meth:`PagedClient.project` when the backend
@@ -513,7 +526,7 @@ def read_paged(
     pages over — i.e. AFTER any server-side ``where`` carried by the
     client, BEFORE any Spark-side residual filter on the returned frame
     (same as stacking ``resultRecordCount`` on a filtered ArcGIS query)."""
-    spark.dataSource.register(PagedDataSource)
+    _register(spark)
     # Python-datasource filter pushdown is off by default in Spark 4.1;
     # self-configure like Catalog does for TZ/NTZ invariants.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
@@ -948,7 +961,7 @@ def write_paged(
     micro-batch) to one sink MUST pass a distinct prefix per dataset, or
     their "<partition>-<index>" keys collide and an idempotent sink
     drops data."""
-    df.sparkSession.dataSource.register(PagedDataSource)
+    _register(df.sparkSession)
     policy = policy or RetryPolicy()
     (
         df.write.format("agol_paged")

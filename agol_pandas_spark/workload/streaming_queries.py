@@ -1192,9 +1192,7 @@ def stream_cdf_tail_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="cdf_tail_cat_")
     try:
-        # manifest-only identity: the spooled transitions' pruning runs
-        # on manifest evidence alone (object-storage posture)
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         cat.write(v1, "t")
         cat.write(v2, "t", mode="overwrite", keep_versions=4)
         # summary seeded from v1 — maintenance must carry it to v3
@@ -1349,7 +1347,7 @@ def pipeline_paged_cdc_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             policy=RetryPolicy(max_attempts=3, max_backoff=0.01),
         ).select("c_custkey", "c_mktsegment", "bal")
 
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         cat.write(
             base.repartitionByRange(8, "c_custkey")
             .sortWithinPartitions("c_custkey"),
@@ -1471,7 +1469,7 @@ def pipeline_join_view_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="join_ivm_")
     try:
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         cat.write(fact1, "f")
         cat.write(
             fact1.join(dim, fact1["o_custkey"] == dim["c_custkey"], "inner")
@@ -1579,7 +1577,7 @@ def pipeline_join_view_bilateral_ivm(
 
     root = tempfile.mkdtemp(prefix="join_ivm2_")
     try:
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         cat.write(fact1, "f")
         cat.write(dim1, "d")
         cat.write(
@@ -1691,7 +1689,7 @@ def pipeline_join_view_tailed(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="join_ivm3_")
     f_tail = d_tail = None
     try:
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         cat.write(fact1.repartition(4), "f")
         cat.write(dim1, "d")
         cat.write(
@@ -1858,7 +1856,7 @@ def pipeline_join_view_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="join_star_")
     f_tail = d1_tail = d2_tail = None
     try:
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         cat.write(fact1.repartition(4), "f")
         cat.write(dim1a, "d1")
         cat.write(dim2a, "d2")

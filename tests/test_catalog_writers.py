@@ -151,6 +151,38 @@ def test_ns_cols_cache_invalidated_on_rewrite(spark, tmp_path):
     assert [f.name for f in cat.table("t").schema] == ["k"]
 
 
+def test_write_local_replaces_directory_table_and_rolls_back(
+    spark, tmp_path, monkeypatch
+):
+    """``write_local`` over a directory-shaped predecessor: the old
+    table is renamed aside, never deleted before the replace lands — a
+    failing ``os.replace`` rolls it back so it still reads row for row,
+    and a succeeding one leaves no aside/staging litter."""
+    import pyarrow as pa
+
+    cat = Catalog(spark, str(tmp_path))
+    old = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, s string")
+    cat.write(old, "m")
+    want = sorted(map(tuple, old.collect()))
+    new = pa.table({"k": pa.array([9], pa.int64()), "s": ["z"]})
+
+    def _boom(src, dst):
+        raise OSError("injected replace failure")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", _boom)
+        with pytest.raises(OSError, match="injected"):
+            cat.write_local(new, "m", mode="overwrite")
+    assert os.path.isdir(cat.path("m"))
+    assert sorted(map(tuple, cat.table("m").collect())) == want
+    assert os.listdir(str(tmp_path)) == ["m.parquet"]  # no litter
+
+    cat.write_local(new, "m", mode="overwrite")
+    assert os.path.isfile(cat.path("m"))
+    assert [tuple(r) for r in cat.table("m").collect()] == [(9, "z")]
+    assert os.listdir(str(tmp_path)) == ["m.parquet"]
+
+
 def test_row_count_metadata_only(spark, sf_dir):
     from agol_pandas_spark.catalog import Catalog
 
@@ -779,19 +811,15 @@ def test_optimistic_concurrency_conflict(spark, tmp_path):
     assert {r.k: r.v for r in cat.table("t").collect()} == {1: 1000, 2: 2000}
 
 
-@pytest.mark.parametrize("identity", ["auto", "manifest"])
 class TestMultiWriterOcc:
     """VERDICT r6 item 5: the pruned-merge / compaction / carryover trio
     under a deterministic two-writer interleave — the stale writer's
-    commit RAISES (never a silent lost update) and retries cleanly.
+    commit RAISES (never a silent lost update) and retries cleanly. OCC
+    is enforced by the commit-id token, not by how file identity is
+    evidenced."""
 
-    Parametrized over snapshot identity (VERDICT r9 item 7): the
-    object-storage-portable manifest mode must carry the SAME
-    concurrency guarantees as the legacy inode path — OCC is enforced
-    by the commit-id token, not by how file identity is evidenced."""
-
-    def _table(self, spark, tmp_path, identity):
-        cat = Catalog(spark, str(tmp_path), snapshot_identity=identity)
+    def _table(self, spark, tmp_path):
+        cat = Catalog(spark, str(tmp_path))
         base = spark.createDataFrame(
             [(i, f"v{i}", float(i)) for i in range(100)],
             "k long, s string, v double",
@@ -803,14 +831,14 @@ class TestMultiWriterOcc:
         return cat
 
     def test_stale_carryover_commit_refused_then_retries(
-        self, spark, tmp_path, identity
+        self, spark, tmp_path
     ):
         import os
 
         from agol_pandas_spark.errors import ConcurrentWriteError
         from agol_pandas_spark.operators.merge import merge_pruned
 
-        cat = self._table(spark, tmp_path, identity)
+        cat = self._table(spark, tmp_path)
         # writer B stages: reads token + file listing, builds its output
         token_b = cat.commit_id("t")
         files_b = cat.data_files("t")
@@ -837,7 +865,7 @@ class TestMultiWriterOcc:
         assert cat.table("t").count() == 101
 
     def test_pruned_merge_detects_mid_flight_writer(
-        self, spark, tmp_path, monkeypatch, identity
+        self, spark, tmp_path, monkeypatch
     ):
         """A writer that lands BETWEEN merge_pruned's footer-span read and
         its commit used to be silently reverted (its files dropped from
@@ -848,7 +876,7 @@ class TestMultiWriterOcc:
 
         merge_mod = importlib.import_module("agol_pandas_spark.operators.merge")
 
-        cat = self._table(spark, tmp_path, identity)
+        cat = self._table(spark, tmp_path)
         a_delta = spark.createDataFrame([(7, "A", 0.0)], "k long, s string, v double")
         b_delta = spark.createDataFrame([(90, "B", 0.0)], "k long, s string, v double")
 
@@ -875,7 +903,7 @@ class TestMultiWriterOcc:
         assert cat.table("t").count() == 100
 
     def test_compaction_racing_writer_refused(
-        self, spark, tmp_path, monkeypatch, identity
+        self, spark, tmp_path, monkeypatch
     ):
         """Selective compaction lists small files, then a writer lands
         before the compaction commit: the compaction must refuse (its
@@ -883,7 +911,7 @@ class TestMultiWriterOcc:
         from agol_pandas_spark.errors import ConcurrentWriteError
         from agol_pandas_spark.operators.merge import write_table
 
-        cat = self._table(spark, tmp_path, identity)
+        cat = self._table(spark, tmp_path)
         raced = {"done": False}
         orig_carry = cat.write_with_carryover
 

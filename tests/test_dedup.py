@@ -313,12 +313,13 @@ def test_star_components_match_union_find(spark):
 def test_lsh_index_param_validation(docs, spark, tmp_path):
     """The index persists its banding parameters; a probe with a
     conflicting layout raises instead of silently missing near-dups, a
-    param-less probe inherits the stored layout, and a legacy index
-    (no meta table) still recovers num_hashes from its mh_* columns."""
+    param-less probe inherits the stored layout, and an index without
+    its meta table (not built by write_lsh_index) raises naming the
+    builder instead of guessing a layout."""
     import pytest as _pytest
 
     from agol_pandas_spark.catalog import Catalog
-    from agol_pandas_spark.errors import LshIndexParamError
+    from agol_pandas_spark.errors import LshIndexParamError, TableNotFoundError
     from agol_pandas_spark.operators.dedup import (
         _lsh_meta_name,
         banded_signatures,
@@ -351,13 +352,13 @@ def test_lsh_index_param_validation(docs, spark, tmp_path):
     with _pytest.raises(LshIndexParamError):
         probe_lsh_index(cat, "lsh", batch, "doc_id", "text", shingle_size=5)
 
-    # legacy index without a meta table: num_hashes inferred from schema
+    # an index without a meta table: no layout to trust -> typed error
     legacy = banded_signatures(
         minhash_signatures(corpus, "doc_id", "text"), "doc_id"
     )
     cat.write(legacy, "old_lsh", mode="overwrite")
-    got = probe_lsh_index(cat, "old_lsh", batch, "doc_id", "text")
-    assert got.count() > 0
+    with _pytest.raises(TableNotFoundError, match="write_lsh_index"):
+        probe_lsh_index(cat, "old_lsh", batch, "doc_id", "text")
 
 
 def test_star_components_raises_on_round_exhaustion(spark):

@@ -9,9 +9,10 @@ identity survives without a filesystem that has inodes. These tests pin:
 
 - every commit path produces a complete manifest;
 - carried files keep their id, rewritten files get a fresh one;
-- diffs are IDENTICAL under ``snapshot_identity`` ∈ {auto, manifest,
-  inode} and under ``prune_shared_files=False`` (the unpruned oracle);
-- manifest mode prunes exactly the files inode mode prunes;
+- pruned diffs are IDENTICAL to ``prune_shared_files=False`` (the
+  unpruned oracle);
+- manifest identity prunes exactly the files hard-link inode identity
+  would (computed independently, from ``os.stat``);
 - missing manifests / externally-added files degrade to unpruned reads,
   never to dropped rows.
 """
@@ -74,9 +75,8 @@ def test_carryover_preserves_file_ids(spark, tmp_path):
     assert len(fresh) >= 1  # the rewritten dirty slice
 
 
-@pytest.mark.parametrize("mode", ["auto", "manifest", "inode"])
-def test_table_changes_identical_across_identity_modes(spark, tmp_path, mode):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity=mode)
+def test_pruned_table_changes_equal_unpruned(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     src = spark.createDataFrame(
         [(0, 99), (1000, 1)], "k long, v long"
@@ -93,28 +93,39 @@ def test_table_changes_identical_across_identity_modes(spark, tmp_path, mode):
 
 
 def test_manifest_prunes_same_files_as_inode(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     src = spark.createDataFrame([(0, 99)], "k long, v long")
     merge_pruned(cat, src, "t", mode="upsert", key="k", keep_versions=5)
     old_path = cat._version_path("t", 1)
     new_path = cat.path("t")
     m_old, m_new = cat._unshared_snapshot_files(old_path, new_path)
-    ino = Catalog(spark, str(tmp_path), snapshot_identity="inode")
-    i_old, i_new = ino._unshared_snapshot_files(old_path, new_path)
+
+    # independent oracle: carried files are hard links, so two snapshots
+    # share a file iff they share its (st_dev, st_ino)
+    def _inodes(path):
+        out = {}
+        for f in os.listdir(path):
+            if not f.startswith(("_", ".")):
+                st = os.stat(os.path.join(path, f))
+                out[f] = (st.st_dev, st.st_ino)
+        return out
+
+    o_ino, n_ino = _inodes(old_path), _inodes(new_path)
+    shared = set(o_ino.values()) & set(n_ino.values())
     assert sorted(os.path.basename(f) for f in m_old) == sorted(
-        os.path.basename(f) for f in i_old
+        f for f, i in o_ino.items() if i not in shared
     )
     assert sorted(os.path.basename(f) for f in m_new) == sorted(
-        os.path.basename(f) for f in i_new
+        f for f, i in n_ino.items() if i not in shared
     )
     # and pruning actually engaged: fewer files than the full snapshots
-    assert len(m_old) < len(cat._snapshot_files(old_path))
-    assert len(m_new) < len(cat._snapshot_files(new_path))
+    assert len(m_old) < len(o_ino)
+    assert len(m_new) < len(n_ino)
 
 
 def test_tag_branch_clone_carry_identities(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     base = _manifest(cat, cat.path("t"))
     ids = {e["file_id"] for e in base.values()}
@@ -128,7 +139,7 @@ def test_tag_branch_clone_carry_identities(spark, tmp_path):
     cat.clone("t", "t2")
     assert {e["file_id"] for e in _manifest(cat, cat.path("t2")).values()} == ids
 
-    # tag diff in manifest-only mode: mutate the table, diff against the tag
+    # tag diff: mutate the table, diff against the tag
     src = spark.createDataFrame([(3, 42)], "k long, v long")
     merge_pruned(cat, src, "t", mode="upsert", key="k", keep_versions=5)
     feed = cat.table_changes_between_tags("t", "r1", key="k")
@@ -144,7 +155,7 @@ def test_tag_branch_clone_carry_identities(spark, tmp_path):
 
 
 def test_publish_branch_keeps_identities(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     bname = cat.branch_table("t", "dev")
     src = spark.createDataFrame([(0, 123)], "k long, v long")
@@ -155,14 +166,14 @@ def test_publish_branch_keeps_identities(spark, tmp_path):
     cat.publish_branch("t", "dev", keep_versions=5)
     pub_ids = {e["file_id"] for e in _manifest(cat, cat.path("t")).values()}
     assert pub_ids == branch_ids
-    # diff published vs archived pre-publish state, manifest-only
+    # diff published vs archived pre-publish state
     feed = cat.table_changes("t", 1, key="k")
     oracle = cat.table_changes("t", 1, key="k", prune_shared_files=False)
     assert _rows(feed) == _rows(oracle)
 
 
 def test_missing_manifest_degrades_to_unpruned_not_wrong(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t")
     src = spark.createDataFrame([(0, 99)], "k long, v long")
     merge_pruned(cat, src, "t", mode="upsert", key="k", keep_versions=5)
@@ -171,46 +182,34 @@ def test_missing_manifest_degrades_to_unpruned_not_wrong(spark, tmp_path):
     old, new = cat._unshared_snapshot_files(
         cat._version_path("t", 1), cat.path("t")
     )
-    assert old is None and new is None  # manifest-only: no evidence, no pruning
+    assert old is None and new is None  # no evidence, no pruning
     feed = cat.table_changes("t", 1, key="k")
     oracle = cat.table_changes("t", 1, key="k", prune_shared_files=False)
     assert _rows(feed) == _rows(oracle)
-    # auto mode falls back to inode evidence and still prunes
-    auto = Catalog(spark, str(tmp_path), snapshot_identity="auto")
-    a_old, a_new = auto._unshared_snapshot_files(
-        cat._version_path("t", 1), cat.path("t")
-    )
-    assert a_old is not None and len(a_old) < len(
-        cat._snapshot_files(cat._version_path("t", 1))
-    )
 
 
 def test_external_file_never_pruned(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t", keep_versions=5)
-    cat.write(cat.table("t"), "t", mode="overwrite", keep_versions=5)
-    # drop a rogue data file (outside any commit) into the new snapshot
-    rogue_src = cat.data_files("t")[0]
-    rogue = os.path.join(cat.path("t"), "zz_rogue.parquet")
+    src = spark.createDataFrame([(0, 99)], "k long, v long")
+    merge_pruned(cat, src, "t", mode="upsert", key="k", keep_versions=5)
+    old_path, new_path = cat._version_path("t", 1), cat.path("t")
+    _, unshared = cat._unshared_snapshot_files(old_path, new_path)
+    carried = sorted(
+        {os.path.basename(f) for f in cat.data_files("t")}
+        - {os.path.basename(f) for f in unshared}
+    )
+    assert carried
+    # drop a rogue data file (outside any commit) into the new snapshot:
+    # a byte-copy of a CARRIED file, so only the manifest tells them apart
     import shutil
 
-    shutil.copy2(rogue_src, rogue)
-    idents = dict(
-        (os.path.basename(f), i)
-        for i, f in cat._manifest_identities(cat.path("t"))
-    )
-    assert idents["zz_rogue.parquet"] is None  # unidentified: always read
-
-
-def test_identity_mode_validation(spark, tmp_path):
-    with pytest.raises(ValueError):
-        Catalog(spark, str(tmp_path), snapshot_identity="etag")
-    os.environ["AGOL_SPARK_SNAPSHOT_IDENTITY"] = "manifest"
-    try:
-        assert Catalog(spark, str(tmp_path)).snapshot_identity == "manifest"
-    finally:
-        del os.environ["AGOL_SPARK_SNAPSHOT_IDENTITY"]
-    assert Catalog(spark, str(tmp_path)).snapshot_identity == "auto"
+    rogue = os.path.join(new_path, "zz_rogue.parquet")
+    shutil.copy2(os.path.join(new_path, carried[0]), rogue)
+    _, unshared = cat._unshared_snapshot_files(old_path, new_path)
+    names = {os.path.basename(f) for f in unshared}
+    assert "zz_rogue.parquet" in names  # unidentified: always read
+    assert carried[0] not in names
 
 
 def test_cleanup_staging_reclaims_only_old_orphans(spark, tmp_path):
@@ -264,8 +263,7 @@ def test_cleanup_staging_reclaims_only_old_orphans(spark, tmp_path):
 def test_manifest_invariants_under_random_commit_sequences(spark, tmp_path):
     """Property test: under ARBITRARY sequences of commit operations
     (overwrite / pruned upsert / append / selective compaction / tag /
-    branch+publish), two invariants must hold at every step in
-    manifest-only mode:
+    branch+publish), two invariants must hold at every step:
 
     1. the live manifest is COMPLETE and size-consistent with disk;
     2. the change feed from every surviving archived version equals the
@@ -295,11 +293,7 @@ def test_manifest_invariants_under_random_commit_sequences(spark, tmp_path):
     @given(seq=ops)
     def run(seq):
         counter[0] += 1
-        cat = Catalog(
-            spark,
-            str(tmp_path / f"prop{counter[0]}"),
-            snapshot_identity="manifest",
-        )
+        cat = Catalog(spark, str(tmp_path / f"prop{counter[0]}"))
         base = spark.range(300).select(
             F.col("id").alias("k"), (F.col("id") % 5).alias("v")
         ).repartition(3, "k")
@@ -367,9 +361,9 @@ def test_manifest_invariants_under_random_commit_sequences(spark, tmp_path):
 def test_manifest_pruning_shrinks_cdf_input_files(spark, tmp_path):
     """The point of manifest identity is that the CDF feed's SCAN (not
     just its rows) stays proportional to the rewritten file set on
-    storage without inodes: in manifest-only mode, the feed's input
-    files must exclude every carried file."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    storage without inodes: the feed's input files must exclude every
+    carried file."""
+    cat = Catalog(spark, str(tmp_path))
     _mk_table(spark, cat, "t", n=400, files=4)
     before = {os.path.basename(f) for f in cat.data_files("t")}
     src = spark.createDataFrame([(0, 99)], "k long, v long")

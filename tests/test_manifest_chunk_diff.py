@@ -2,7 +2,7 @@
 
 Round 9 made manifest WRITES O(delta) (manifest list + immutable chunk
 reuse) but every READ still merged all chunk JSONs on the driver —
-``snapshot_manifest`` + ``_manifest_identities`` were the last O(table)
+``snapshot_manifest`` + a full identity pass were the last O(table)
 driver step, paid per CDF diff / pruned merge. The chunk-aware diff
 (``Catalog._chunk_pruned_diff``) parses ONLY the chunks NOT shared (by
 immutable uuid name, i.e. by hard-link reuse) between the two snapshots:
@@ -34,11 +34,22 @@ def _mk(spark, lo, hi, bump=0):
 
 
 def _full_path_diff(cat, old_path, new_path):
-    """The pre-r10 full-parse diff, reconstructed from the identity
-    reader that still backs it — the equivalence oracle."""
-    ofs = cat._manifest_identities(old_path)
-    nfs = cat._manifest_identities(new_path)
-    assert ofs is not None and nfs is not None
+    """The pre-r10 full-parse diff — every chunk of both manifests
+    merged, each disk file identified by its (file_id, size) entry or
+    None when absent/size-mismatched — the equivalence oracle."""
+
+    def _identities(path):
+        man = cat.snapshot_manifest(path)
+        assert man is not None
+        out = []
+        for rp, size in cat._list_with_sizes(path):
+            e = man.get(rp)
+            ok = e is not None and e.get("size") == size
+            out.append(((e["file_id"], size) if ok else None,
+                        os.path.join(path, rp)))
+        return out
+
+    ofs, nfs = _identities(old_path), _identities(new_path)
     shared = {i for i, _ in ofs if i is not None} & {
         i for i, _ in nfs if i is not None
     }
@@ -61,7 +72,7 @@ def test_chunk_diff_equals_full_parse_across_engine_history(
     under the chunk-aware fast path and the full parse."""
     from agol_pandas_spark.operators.merge import merge_pruned, write_table
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     base = (
         _mk(spark, 0, 240)
         .repartitionByRange(12, "k")
@@ -100,7 +111,7 @@ def test_chunk_diff_parses_o_dirty_chunks(spark, tmp_path, monkeypatch):
     snapshot (chunk=256 → ~79 chunks/side): a 10-file delta must parse
     O(1) chunks, not all of them."""
     monkeypatch.setenv("AGOL_SPARK_MANIFEST_CHUNK", "256")
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     a = str(tmp_path / "a")
     os.makedirs(a)
     names = [f"part-{i:05d}.parquet" for i in range(20_000)]
@@ -147,7 +158,7 @@ def test_disk_truth_still_wins_over_shared_chunks(
     outside the engine is read; a file deleted from one side makes the
     other side's copy read; a size-tampered file in a parsed chunk is
     read on both sides."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
     os.makedirs(a)
@@ -205,7 +216,7 @@ def test_table_changes_rides_the_chunk_diff(spark, tmp_path, small_chunks):
     with a small parse count, and emits exactly the changed rows."""
     from agol_pandas_spark.operators.merge import merge_pruned
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     base = (
         _mk(spark, 0, 300)
         .repartitionByRange(10, "k")
@@ -238,7 +249,7 @@ def test_double_injection_is_read_not_pruned(spark, tmp_path, small_chunks):
     account for), the shared chunks are parsed ONCE to verify
     membership, and the injected pair is read on both sides — matching
     the full path."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
     os.makedirs(a)

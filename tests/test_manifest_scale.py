@@ -66,7 +66,7 @@ def big_snapshot(spark, tmp_path_factory):
     bytes (identity is (file_id, size) carried by reference), so tiny
     files exercise exactly the metadata path a 100 TB table would."""
     root = tmp_path_factory.mktemp("mscale")
-    cat = Catalog(spark, str(root), snapshot_identity="manifest")
+    cat = Catalog(spark, str(root))
     a = str(root / "a")
     names = [f"part-{i:06d}.parquet" for i in range(N_FILES)]
     _mk_files(a, names)
@@ -139,7 +139,7 @@ def test_distributed_stat_path_matches_driver_path(
 ):
     """Above AGOL_SPARK_DIST_LIST_THRESHOLD the per-file stat fans out
     over executors; the listing must be bit-identical either way."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     d = str(tmp_path / "snap")
     _mk_files(d, [f"f-{i:04d}.parquet" for i in range(300)])
     os.makedirs(os.path.join(d, "sub"))
@@ -161,7 +161,7 @@ def test_distributed_key_spans_match_driver_path(
     land on the driver loop."""
     from pyspark.sql import functions as F
 
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     df = spark.range(600).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v"),
         F.format_string("s%04d", F.col("id")).alias("s"),
@@ -191,7 +191,7 @@ def test_distributed_key_spans_match_driver_path(
         sparkContext = _Boom()
 
     monkeypatch.setenv("AGOL_SPARK_DIST_LIST_THRESHOLD", "2")
-    shim = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    shim = Catalog(spark, str(tmp_path))
     shim.spark = _SparkShim()
     # ADVICE r10: the silent fallback is now LOUD — a serial loop at
     # >=100k files looks like a hang, and the triggering error matters
@@ -208,7 +208,7 @@ def test_distributed_stat_falls_back_to_driver_on_executor_failure(
     the same path, the executor-side stat job fails inside Spark — the
     listing must fall back to the driver loop (slower, never wrong)
     instead of surfacing FileNotFoundError from a metadata read."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     d = str(tmp_path / "snap")
     _mk_files(d, [f"f-{i:04d}.parquet" for i in range(150)])
     driver = cat._list_with_sizes(d)
@@ -221,7 +221,7 @@ def test_distributed_stat_falls_back_to_driver_on_executor_failure(
     class _SparkShim:
         sparkContext = _Boom()
 
-    shim = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    shim = Catalog(spark, str(tmp_path))
     shim.spark = _SparkShim()  # plain attribute: swap in the failing SC
     with pytest.warns(UserWarning, match="executor fan-out failed"):
         assert shim._list_with_sizes(d) == driver
@@ -231,10 +231,12 @@ def test_distributed_stat_falls_back_to_driver_on_executor_failure(
 def test_legacy_monolithic_manifest_upgrades_with_ids_carried(
     spark, tmp_path
 ):
-    """A pre-r9 snapshot (format-1 monolith) must stay readable, and a
-    carryover commit over it must carry its file_ids into the format-2
-    layout — the in-place upgrade path for existing tables."""
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    """A pre-r9 snapshot (format-1 monolith) reads as UNMANIFESTED: no
+    file ids, so a change feed across it diffs unpruned and equals the
+    ``prune_shared_files=False`` oracle. The next carryover commit over
+    it writes a format-2 manifest list covering every data file (fresh
+    ids — there are none to carry)."""
+    cat = Catalog(spark, str(tmp_path))
     df = spark.range(200).select(
         F.col("id").alias("k"), (F.col("id") % 5).alias("v")
     ).repartition(4, "k")
@@ -247,25 +249,31 @@ def test_legacy_monolithic_manifest_upgrades_with_ids_carried(
             os.remove(os.path.join(p, f))
     with open(os.path.join(p, MANIFEST_NAME), "w") as fh:
         json.dump({"files": man}, fh, sort_keys=True)
-    assert cat.snapshot_manifest(p) == man  # format 1 reads fine
+    assert cat.snapshot_manifest(p) is None  # format 1: no manifest
 
-    carry = cat.data_files("t")
-    cat.write_with_carryover(
-        df.filter(F.lit(False)).limit(0), "t", carry_files=carry,
-        keep_versions=3,
+    extra = spark.range(200, 210).select(
+        F.col("id").alias("k"), (F.col("id") % 5).alias("v")
     )
+    cat.write_with_carryover(
+        extra, "t", carry_files=cat.data_files("t"), keep_versions=3,
+    )
+    legacy = cat.versions("t")[-1]
+    assert cat._unshared_snapshot_files(
+        cat._version_path("t", legacy), cat.path("t")
+    ) == (None, None)
+    feed = cat.table_changes("t", legacy, key="k")
+    oracle = cat.table_changes("t", legacy, key="k", prune_shared_files=False)
+    rows = sorted(tuple(r) for r in feed.collect())
+    assert rows == sorted(tuple(r) for r in oracle.collect())
+    assert [r[0] for r in rows] == list(range(200, 210))
+
     p2 = cat.path("t")
-    man2 = cat.snapshot_manifest(p2)
     with open(os.path.join(p2, MANIFEST_NAME)) as fh:
         assert json.load(fh).get("format") == 2  # upgraded layout
-    carried_ids = {
-        e["file_id"] for rp, e in man2.items() if rp in man
-    }
-    assert {man[rp]["file_id"] for rp in man} <= carried_ids | {
-        man2[rp]["file_id"] for rp in man2
-    }
-    for rp, e in man.items():
-        assert man2[rp]["file_id"] == e["file_id"]
+    man2 = cat.snapshot_manifest(p2)
+    disk = {os.path.relpath(f, p2) for f in cat.data_files("t")}
+    assert man2 is not None and set(man2) == disk
+    assert set(man) < disk  # the carried files are covered too
 
 
 def test_chunk_reuse_through_real_carryover_commits(
@@ -275,7 +283,7 @@ def test_chunk_reuse_through_real_carryover_commits(
     carries every prior file forward reuses the prior snapshot's chunk
     manifests by inode, and table_changes prunes to the new files."""
     monkeypatch.setenv("AGOL_SPARK_MANIFEST_CHUNK", "8")
-    cat = Catalog(spark, str(tmp_path), snapshot_identity="manifest")
+    cat = Catalog(spark, str(tmp_path))
     df = spark.range(400).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     ).repartition(32, "k")

@@ -73,6 +73,37 @@ def test_pagination_exactly_once(spark):
     assert got == list(range(95))  # no dup, no drop across page boundaries
 
 
+def test_datasource_registered_once_per_session(spark, monkeypatch):
+    """Each registration logs a DataSourceManager WARN: a session
+    registers ``agol_paged`` on its first paged read only."""
+    import weakref
+
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from agol_pandas_spark.sources import paged
+
+    read_paged(spark, MemoryClient(_rows(5)), page_size=5, policy=FAST_RETRY)
+    calls = []
+    register = DataSourceRegistration.register
+
+    def _counting(self, ds):
+        calls.append(ds)
+        return register(self, ds)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", _counting)
+    for _ in range(2):
+        df = read_paged(
+            spark, MemoryClient(_rows(5)), page_size=5, policy=FAST_RETRY
+        )
+        assert df.count() == 5
+    assert calls == []
+    # a session the helper has not seen registers exactly once
+    monkeypatch.setattr(paged, "_REGISTERED", weakref.WeakSet())
+    for _ in range(2):
+        read_paged(spark, MemoryClient(_rows(5)), page_size=5, policy=FAST_RETRY)
+    assert len(calls) == 1
+
+
 def test_schema_fidelity(spark):
     rows = _rows(20)
     df = read_paged(spark, MemoryClient(rows), page_size=7, policy=FAST_RETRY)

@@ -831,6 +831,74 @@ def test_ivfpq_probe_rejects_mixed_layout_state(spark, sf_dir, tmp_path):
         probe_ivfpq_index(cat, "idx", queries, query_id="query_id")
 
 
+def test_ivfpq_probe_rejects_null_codes_row(spark, sf_dir, tmp_path):
+    """A NULL first ``codes`` row cannot be checked against the meta's
+    layout: the probe raises instead of skipping the check (``None``
+    from the width read means an EMPTY index only)."""
+    import pytest as _pytest
+
+    from agol_pandas_spark.catalog import Catalog
+    from agol_pandas_spark.errors import VectorIndexParamError
+    from agol_pandas_spark.operators.similarity import (
+        pq_codebook_from_seeds,
+        probe_ivfpq_index,
+        write_ivfpq_index,
+    )
+
+    emb = Catalog(spark, sf_dir).table("embeddings").filter(
+        F.col("vec_id") < 400
+    )
+    pivots = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("pivot_id"), "embedding"
+    )
+    cat = Catalog(spark, str(tmp_path))
+    write_ivfpq_index(cat, "idx", emb, pivots,
+                      pq_codebook_from_seeds(emb, "vec_id"),
+                      corpus_id="vec_id", pivot_id="pivot_id",
+                      m_subspaces=4, k_codes=8)
+    coded = cat.table("idx")
+    nulled = coded.withColumn(
+        "codes", F.lit(None).cast(coded.schema["codes"].dataType)
+    )
+    cat.write(nulled.coalesce(1), "idx", mode="overwrite")
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    with _pytest.raises(VectorIndexParamError, match="NULL codes"):
+        probe_ivfpq_index(cat, "idx", queries, query_id="query_id")
+
+
+def test_ivfpq_unmappable_model_type_raises_before_commit(
+    spark, sf_dir, tmp_path
+):
+    """The model tables are Arrow-typed from the Spark schema BEFORE any
+    index table commits: pivots whose vectors Arrow cannot carry as
+    collected (an ML ``VectorUDT``) raise and leave no partial index."""
+    import pyarrow as pa
+    import pytest as _pytest
+    from pyspark.ml.functions import array_to_vector
+
+    from agol_pandas_spark.catalog import Catalog
+    from agol_pandas_spark.operators.similarity import (
+        pq_codebook_from_seeds,
+        write_ivfpq_index,
+    )
+
+    emb = Catalog(spark, sf_dir).table("embeddings").filter(
+        F.col("vec_id") < 400
+    )
+    pivots = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("pivot_id"),
+        array_to_vector("embedding").alias("embedding"),
+    )
+    cat = Catalog(spark, str(tmp_path))
+    with _pytest.raises(pa.ArrowException):
+        write_ivfpq_index(cat, "idx", emb, pivots,
+                          pq_codebook_from_seeds(emb, "vec_id"),
+                          corpus_id="vec_id", pivot_id="pivot_id")
+    assert cat.list_tables() == []
+
+
 def test_arrow_lut_bit_identical_to_sql_lut(emb, spark):
     """r11 optimization guard: the Arrow LUT kernel
     (``_pq_lut_from_matrix``, one map — the path every ADC scorer now

@@ -60,7 +60,7 @@ def main() -> None:
     root = tempfile.mkdtemp(prefix="cow_bytes_")
     f_tail = d_tail = None
     try:
-        cat = Catalog(spark, root, snapshot_identity="manifest")
+        cat = Catalog(spark, root)
         cat.write(
             fact1.repartitionByRange(n_files, "o_orderkey")
             .sortWithinPartitions("o_orderkey"),
