@@ -1071,8 +1071,12 @@ class Catalog:
                     rows, columns=[f.name for f in schema.fields]
                 )
 
-        paths = self.spark.createDataFrame(
-            [(f,) for f in files], "path string"
+        from agol_pandas_spark.exchange import local_frame
+
+        paths = local_frame(
+            self.spark,
+            [(f,) for f in files],
+            T.StructType([T.StructField("path", T.StringType())]),
         ).repartition(min(len(files), 64))
         return paths.mapInPandas(read_footers, schema)
 
@@ -1509,6 +1513,7 @@ class Catalog:
         # hash the probe values with the SAME Spark kernel (tiny job,
         # |values| rows — model state, not data)
         field = next(f for f in self.table(name).schema.fields if f.name == col)
+        # list path, not local_frame: values are caller-typed (timestamps too)
         probe = self.spark.createDataFrame(
             [(v,) for v in values], T.StructType([field])
         )
@@ -1542,8 +1547,7 @@ class Catalog:
             stats = {"files_total": files_total, "files_read": len(files_read)}
             if not files_read:
                 return (
-                    self.spark.createDataFrame([], self.table(name).schema)
-                    .filter(F.col(col).isin(values)),
+                    self.table(name).limit(0).filter(F.col(col).isin(values)),
                     stats,
                 )
             return (
@@ -1563,7 +1567,7 @@ class Catalog:
                 files_read.add(file)
         stats = {"files_total": len(files_all), "files_read": len(files_read)}
         if not files_read:
-            out = self.spark.createDataFrame([], self.table(name).schema)
+            out = self.table(name).limit(0)
         else:
             out = self.spark.read.parquet(*sorted(files_read))
         return out.filter(F.col(col).isin(values)), stats
@@ -1827,87 +1831,79 @@ class Catalog:
             )
         old = self._read_snapshot(old_path, old_files)
         new = self._read_snapshot(new_path, new_files)
-        if set(old.columns) != set(new.columns):
+        cols, old_cols = new.columns, set(old.columns)
+        if old_cols != set(cols):
             if not align_schemas:
                 raise SchemaMismatchError(
                     f"snapshots of {name!r} differ in columns: "
-                    f"{sorted(set(old.columns) ^ set(new.columns))} — pass "
+                    f"{sorted(old_cols ^ set(cols))} — pass "
                     "align_schemas=True to diff the shared projection, or "
                     "select the shared columns yourself"
                 )
             # schema-evolved diff: compare the SHARED projection, in the
-            # new snapshot's column order. Semantics (documented, the
+            # new snapshot's column order (the side projections below
+            # read only ``cols``). Semantics (documented, the
             # Delta-CDF-with-column-mapping shape): added and dropped
             # columns are invisible to the feed — a row differing ONLY in
             # them emits nothing; shared-file pruning above is unaffected
             # (identity is per-file, not per-column).
-            shared = [c for c in new.columns if c in set(old.columns)]
-            if not shared:
+            cols = [c for c in cols if c in old_cols]
+            if not cols:
                 raise SchemaMismatchError(
                     f"snapshots of {name!r} share no columns — nothing "
                     "to diff"
                 )
-            old = old.select(*[backticked(c) for c in shared])
-            new = new.select(*[backticked(c) for c in shared])
-        cols = new.columns
         missing = [k for k in key if k not in cols]
         if missing:
             raise MissingKeyError(f"key column(s) {missing} not in {cols}")
         vals = [c for c in cols if c not in key]
-        # all parsed references go through backticked(): a column named
-        # 'a.b' must stay one column, not a struct-field path
-        o = old.select(
-            *[F.col(backticked(c)).alias(f"__o_{c}") for c in cols],
-            F.lit(True).alias("__o_present"),
-        )
-        n = new.select(
-            *[F.col(backticked(c)).alias(f"__n_{c}") for c in cols],
-            F.lit(True).alias("__n_present"),
-        )
-        cond = None
-        for k in key:
-            c = F.col(backticked(f"__o_{k}")).eqNullSafe(F.col(backticked(f"__n_{k}")))
-            cond = c if cond is None else (cond & c)
-        j = o.join(n, cond, "full_outer")
-        changed = F.lit(False)
-        for v in vals:
-            changed = changed | ~F.col(backticked(f"__o_{v}")).eqNullSafe(
-                F.col(backticked(f"__n_{v}"))
-            )
-        pre = F.struct(*[F.col(backticked(f"__o_{c}")).alias(c) for c in cols])
-        post = F.struct(*[F.col(backticked(f"__n_{c}")).alias(c) for c in cols])
+        # The plan is built from a fixed number of DataFrame calls, each
+        # taking SQL strings, so its py4j cost does not grow with the
+        # column count (a Column object per column expression would cost
+        # several round trips each). Every name goes through
+        # backticked(): 'a.b' stays one column, and names carrying
+        # backticks or quotes survive because no name is ever spelled as
+        # a string literal — struct fields are named with `expr AS name`.
+        def o_(c: str) -> str:
+            return backticked(f"__o_{c}")
 
-        def _tagged(img: F.Column, typ: str) -> F.Column:
-            return F.struct(
-                img.alias("row"), F.lit(typ).alias("_change_type")
-            )
+        def n_(c: str) -> str:
+            return backticked(f"__n_{c}")
 
+        # one call per side renames (and orders) its columns and adds the
+        # presence flag the full-outer join leaves NULL on a missing side
+        o = old.selectExpr(
+            *[f"{backticked(c)} AS {o_(c)}" for c in cols], "true AS __o_present"
+        )
+        n = new.selectExpr(
+            *[f"{backticked(c)} AS {n_(c)}" for c in cols], "true AS __n_present"
+        )
+        # null-safe key equality: a NULL key is a key value like any other
+        j = o.join(
+            n, F.expr(" AND ".join(f"{o_(k)} <=> {n_(k)}" for k in key)),
+            "full_outer",
+        )
+        changed = (
+            " OR ".join(f"NOT ({o_(v)} <=> {n_(v)})" for v in vals) or "false"
+        )
+
+        def _event(side, typ: str) -> str:
+            # one output row: the image's columns plus its change type
+            fields = ", ".join(f"{side(c)} AS {backticked(c)}" for c in cols)
+            return f"struct({fields}, '{typ}' AS _change_type)"
+
+        # one CASE picks each joined row's event array; inline() is the
+        # single Generate that explodes it straight into output columns.
+        # The ELSE branch is a typed empty array: slice(_, 1, 0) keeps
+        # the element type of its input without spelling out DDL.
         events = (
-            F.when(
-                F.col("__o_present").isNull(), F.array(_tagged(post, "insert"))
-            )
-            .when(
-                F.col("__n_present").isNull(), F.array(_tagged(pre, "delete"))
-            )
-            .when(
-                changed,
-                F.array(
-                    _tagged(pre, "update_preimage"),
-                    _tagged(post, "update_postimage"),
-                ),
-            )
-            .otherwise(
-                # typed empty array without spelling out DDL (which would
-                # break on column names needing backticks): slice(_, 1, 0)
-                # keeps the element type of its input
-                F.slice(F.array(_tagged(pre, "none")), 1, 0)
-            )
+            f"CASE WHEN __o_present IS NULL THEN array({_event(n_, 'insert')}) "
+            f"WHEN __n_present IS NULL THEN array({_event(o_, 'delete')}) "
+            f"WHEN {changed} THEN array({_event(o_, 'update_preimage')}, "
+            f"{_event(n_, 'update_postimage')}) "
+            f"ELSE slice(array({_event(o_, 'none')}), 1, 0) END"
         )
-        ex = j.select(F.explode(events).alias("e"))
-        return ex.select(
-            *[F.col("e")["row"][c].alias(c) for c in cols],
-            F.col("e")["_change_type"].alias("_change_type"),
-        )
+        return j.selectExpr(f"inline({events})")
 
     def cleanup_staging(self, max_age_sec: float = 24 * 3600.0) -> list[str]:
         """Reclaim orphaned ``*.__tmp_*`` staging entries (directories

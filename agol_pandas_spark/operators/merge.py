@@ -215,10 +215,13 @@ def merge(
     ``localCheckpoint`` (they are delta-sized by contract; the guard job
     computes the blocks, the returned plan's references read them, and
     the blocks free when the plan is garbage-collected). Consequence:
-    the returned plan is valid for the session's current cache
-    generation — re-executing it after ``spark.catalog.clearCache()``
-    raises instead of silently recomputing (rebuild the merge in that
-    case, as every engine-internal caller does).
+    the returned plan lives as long as those blocks.
+    ``spark.catalog.clearCache()`` leaves them alone (they are not
+    SQL-cache entries), but ``session.release_session_blocks`` unpersists
+    them, and a plan that must read them afterwards raises
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of silently recomputing
+    the source. Rebuild the merge in that case, as every engine-internal
+    caller does.
     """
     m = WriteMode.parse(mode) if isinstance(mode, str) else mode
     if key is not None and m in KEYED_MODES and not _source_checked:
@@ -406,7 +409,14 @@ def write_table(
             return merge_pruned(
                 catalog, source, name, m, key, snapshot_props=snapshot_props
             )["path"]
-        result = merge(catalog.table(name), source, m, key)
+        if persisted:
+            # guard once here and tell merge() so: it would otherwise
+            # re-run the guard and localCheckpoint the already-persisted
+            # source (a second materialization of the same delta)
+            _check_keyed_source(source, _keys(key))
+        result = merge(
+            catalog.table(name), source, m, key, _source_checked=persisted
+        )
         # self-referential overwrite: the plan reads the files it will
         # replace, so stage to a new directory first (catalog.write is
         # atomic).
@@ -471,6 +481,8 @@ def _touched_paths(
       keyspace map; dates could but the win is marginal at file counts
       where this path is chosen.)
     """
+    from agol_pandas_spark.exchange import local_frame
+
     spark = source.sparkSession
     fields = [T.StructField("__path", T.StringType())]
     for k in ks:
@@ -506,7 +518,7 @@ def _touched_paths(
             rows.extend((cell, *base) for cell in range(lo_c, hi_c + 1))
         touched = set(forced)
         if rows:
-            cells_df = spark.createDataFrame(rows, cell_fields)
+            cells_df = local_frame(spark, rows, cell_fields)
             probe = source.select(
                 *ks, (F.col(k0).cast("long") - F.pmod(F.col(k0).cast("long"), F.lit(g)))
                 .cast("long").alias("__kc")
@@ -537,7 +549,7 @@ def _touched_paths(
         tuple([s["path"]] + [v for k in ks for v in (s["min"][k], s["max"][k])])
         for s in stat_spans
     ]
-    span_df = spark.createDataFrame(rows, T.StructType(fields))
+    span_df = local_frame(spark, rows, T.StructType(fields))
     return {
         r["__path"]
         for r in source.select(*ks)
@@ -568,10 +580,12 @@ def merge_pruned(
        O(files) metadata, no data scan);
     2. mark a file DIRTY iff some single source row's key components all
        fall inside the file's per-column spans — computed distributedly:
-       the span table (O(files) small rows) is broadcast and the source's
-       key columns stream through one join; only the distinct dirty PATH
-       list (bounded by the file count) ever reaches the driver, never
-       the keys. Files lacking footer stats are dirty by fiat;
+       the span table (O(files) small rows) is built on the driver as an
+       Arrow ``LocalRelation`` (``exchange.local_frame``, so no Python
+       worker runs), broadcast, and the source's key columns stream
+       through one join; only the distinct dirty PATH list (bounded by
+       the file count) ever reaches the driver, never the keys. Files
+       lacking footer stats are dirty by fiat;
     3. run the ordinary :func:`merge` against the dirty slice only —
        sound because a file whose span excludes every source key cannot
        contain a matching row, so its rows pass through any keyed mode
@@ -740,7 +754,7 @@ def _merge_pruned_body(
     if dirty:
         dirty_df = spark.read.option("mergeSchema", "true").parquet(*dirty)
     else:
-        dirty_df = spark.createDataFrame([], target_df.schema)
+        dirty_df = target_df.limit(0)
     result_dirty = merge(
         dirty_df, source, m, ks or None, _source_checked=True
     )

@@ -40,6 +40,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 __all__ = [
@@ -188,11 +189,20 @@ def add_global_ranks(
         racc += stats[pid][0]
         kacc += stats[pid][1]
 
+    from agol_pandas_spark.exchange import local_frame
+
     offs = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(pid, rows_before[pid], keys_before[pid]) for pid in sorted(stats)]
             or [(0, 0, 0)],
-            "__pid int, __rows_before long, __keys_before long",
+            T.StructType(
+                [
+                    T.StructField("__pid", T.IntegerType()),
+                    T.StructField("__rows_before", T.LongType()),
+                    T.StructField("__keys_before", T.LongType()),
+                ]
+            ),
         )
     )
 

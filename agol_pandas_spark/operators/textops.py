@@ -20,6 +20,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from agol_pandas_spark.functions.text import (
     count_tokens_in,
@@ -430,10 +431,17 @@ def domain_mix_sample(
     read twice (count pass + filter pass). At scale, feed ``counts`` from
     catalog statistics instead to make it one pass.
     """
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(
+    from agol_pandas_spark.exchange import local_frame
+
+    wdf = local_frame(
+        df.sparkSession,
         [(d, float(w)) for d, w in weights.items()],
-        f"{domain_col} string, __w double",
+        T.StructType(
+            [
+                T.StructField(domain_col, T.StringType()),
+                T.StructField("__w", T.DoubleType()),
+            ]
+        ),
     )
     counts = (
         df.join(F.broadcast(wdf), domain_col)
@@ -557,7 +565,6 @@ def _gopher_flags_arrow_cached(
 ):
     import re
 
-    from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
     from agol_pandas_spark.functions.text import py_tokens
@@ -820,8 +827,6 @@ def gated_chunk_token_windows(
     ``min_words >= 1``; empty/failing documents emit nothing).
     """
     import re
-
-    from pyspark.sql import types as T
 
     from agol_pandas_spark.functions.text import py_hash60, py_tokens
 

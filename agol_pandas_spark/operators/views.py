@@ -249,10 +249,9 @@ def _td_pruned_scan(
         _touched_paths(td, stat_spans, jkeys, fields) if stat_spans else set()
     )
     dirty = sorted(set(forced) | touched)
-    spark = fact.sparkSession
     if not dirty:
-        return spark.createDataFrame([], fact.schema)
-    return spark.read.schema(fact.schema).parquet(*dirty)
+        return fact.limit(0)
+    return fact.sparkSession.read.schema(fact.schema).parquet(*dirty)
 
 
 def star_view_delta(
@@ -594,7 +593,7 @@ def commit_join_view_delta(
     if dirty:
         dirty_df = spark.read.schema(view.schema).parquet(*sorted(dirty))
     else:
-        dirty_df = spark.createDataFrame([], view.schema)
+        dirty_df = view.limit(0)
     kept_dirty = _drop_touched(dirty_df, tf, tds, fkeys)
     result = kept_dirty.select(*cols).unionByName(added.select(*cols))
     path = view_catalog.write_with_carryover(

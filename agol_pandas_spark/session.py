@@ -77,8 +77,11 @@ def release_session_blocks(spark) -> None:
     marathons): each individual query's footprint is bounded, but
     without a release the SUM of all previous queries' checkpoint
     blocks squats on executor memory — a 291-query sweep OOM'd a
-    default-sized driver exactly this way (r6). Releasing is always
-    safe: a released plan recomputes, it never breaks.
+    default-sized driver exactly this way (r6). A plan over a released
+    persist recomputes; a plan over a released ``localCheckpoint`` (for
+    example a keyed bare ``merge()`` result) raises
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` once it must read the released
+    blocks — rebuild it.
     """
     spark.catalog.clearCache()
     try:

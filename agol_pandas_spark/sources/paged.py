@@ -607,6 +607,7 @@ def read_paged_aggregate(
     res = policy.run(client.aggregate, list(group_by), list(stats), having)
     if res is not None:
         schema, rows = res
+        # list path, not local_frame: service rows are caller-typed
         return spark.createDataFrame(list(rows), schema)
     from pyspark.sql import functions as F
 

@@ -1,6 +1,7 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+"cpus": N} — ``cpus`` is the live ``defaultParallelism`` the timings ran at.
 
 Each query is executed four times: a warm-up plan+run is NOT counted
 (JVM/JIT and file-listing noise), then min-of-3 timed runs (r5: was
@@ -79,6 +80,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "cpus": spark.sparkContext.defaultParallelism,
             }
         )
     )

@@ -1397,6 +1397,85 @@ def test_table_changes_and_ivm_handle_dotted_column_names(spark, tmp_path):
     ]
 
 
+def _replayed_changes(old_rows, new_rows, cols, key):
+    """The change feed computed in Python: rows keyed by their key tuple
+    (NULL is a key value), projected on ``cols``, plus the change type."""
+    old = {tuple(r[k] for k in key): r for r in old_rows}
+    new = {tuple(r[k] for k in key): r for r in new_rows}
+    out = []
+    for kv in old.keys() | new.keys():
+        pre = tuple(old[kv][c] for c in cols) if kv in old else None
+        post = tuple(new[kv][c] for c in cols) if kv in new else None
+        if pre is None:
+            out.append(post + ("insert",))
+        elif post is None:
+            out.append(pre + ("delete",))
+        elif pre != post:
+            out += [pre + ("update_preimage",), post + ("update_postimage",)]
+    return sorted(out, key=repr)
+
+
+def test_table_changes_replay_with_hostile_column_names(spark, tmp_path):
+    """The feed equals a Python replay on columns named ``a.b``, with a
+    backtick and with quotes, NULLs in key and value columns — both on
+    identical schemas and through align_schemas over an evolved one."""
+    from pyspark.sql import types as T
+
+    dot, tick, quote = "a.b", "we`ird", "it's \"q\""
+    cols1 = ["k", dot, tick, quote]
+    schema1 = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField(dot, T.StringType()),
+            T.StructField(tick, T.DoubleType()),
+            T.StructField(quote, T.LongType()),
+        ]
+    )
+    v1 = [
+        (1, "x", 1.0, 1), (2, None, None, None), (None, "nk", 2.0, 3),
+        (3, "y", 3.0, 4), (4, "same", 4.0, None),
+    ]
+    v2 = [
+        (1, "x2", 1.0, 1), (2, "now", None, None), (None, "nk", 2.5, 3),
+        (5, None, None, 9), (4, "same", 4.0, None),
+    ]
+    cat = Catalog(spark, str(tmp_path / "hostile"))
+    cat.write(spark.createDataFrame(v1, schema1), "t")
+    cat.write(
+        spark.createDataFrame(v2, schema1), "t", mode="overwrite",
+        keep_versions=2,
+    )
+
+    def as_dicts(rows, cols):
+        return [dict(zip(cols, r)) for r in rows]
+
+    for key in (["k"], ["k", dot]):
+        for align in (False, True):
+            feed = cat.table_changes("t", 1, key=key, align_schemas=align)
+            assert feed.columns == cols1 + ["_change_type"]
+            got = sorted((tuple(r) for r in feed.collect()), key=repr)
+            assert got == _replayed_changes(
+                as_dicts(v1, cols1), as_dicts(v2, cols1), cols1, key
+            ), (key, align)
+    # evolved schema: the quoted column is dropped, "e x" is added; the
+    # feed diffs the shared projection in the new snapshot's order
+    cols3 = ["k", tick, dot, "e x"]
+    v3 = [(1, 1.0, "x3", "e"), (5, None, None, None), (6, 6.0, "six", None)]
+    cat.write(
+        spark.createDataFrame(
+            v3, "k long, `we``ird` double, `a.b` string, `e x` string"
+        ),
+        "t", mode="overwrite", keep_versions=3,
+    )
+    shared = ["k", tick, dot]
+    feed = cat.table_changes("t", 2, key="k", align_schemas=True)
+    assert feed.columns == shared + ["_change_type"]
+    got = sorted((tuple(r) for r in feed.collect()), key=repr)
+    assert got == _replayed_changes(
+        as_dicts(v2, cols1), as_dicts(v3, cols3), shared, ["k"]
+    )
+
+
 def test_table_changes_align_schemas_evolved_snapshots(spark, tmp_path):
     """Schema-evolved CDF (r8): align_schemas=True diffs the shared
     projection — added/dropped columns are invisible, rows differing

@@ -523,3 +523,77 @@ def test_bare_merge_delete_caches_keys_only(spark):
     out = merge(target, source, "delete", key="k")
     assert out.count() == 40
     assert acc.value == 0, "delete evaluated payload columns"
+
+
+def test_write_table_keyed_merge_materializes_source_once(
+    spark, tmp_path, monkeypatch
+):
+    """A keyed write_table into an existing table persists its source
+    and runs the key guard once; merge() must not localCheckpoint the
+    already-persisted delta a second time. The single guard still
+    rejects duplicate keys and empty sources."""
+    from agol_pandas_spark.catalog import Catalog
+    from agol_pandas_spark.operators.merge import write_table
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    schema = "k long, v string"
+    write_table(
+        cat, spark.createDataFrame([(1, "a"), (2, "b")], schema), "t",
+        mode="upsert", key="k",
+    )
+    frame_cls = type(cat.table("t"))
+    checkpoints = []
+    real = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpoints.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    for mode, rows in [
+        ("upsert", [(2, "B"), (3, "c")]),
+        ("update", [(1, "A"), (9, "never")]),
+        ("insert", [(1, "ignored"), (4, "d")]),
+        ("delete", [(3, "x")]),
+    ]:
+        write_table(
+            cat, spark.createDataFrame(rows, schema), "t", mode=mode, key="k"
+        )
+    assert sorted(tuple(r) for r in cat.table("t").collect()) == [
+        (1, "A"), (2, "B"), (4, "d"),
+    ]
+    with pytest.raises(DuplicateKeyError):
+        write_table(
+            cat, spark.createDataFrame([(5, "x"), (5, "y")], schema), "t",
+            mode="upsert", key="k",
+        )
+    with pytest.raises(EmptyInputError):
+        write_table(
+            cat, spark.createDataFrame([], schema), "t", mode="upsert", key="k"
+        )
+    assert checkpoints == []
+
+
+def test_bare_merge_checkpoint_lifecycle(spark):
+    """What the lazy localCheckpoint of a keyed bare merge() means for
+    the returned plan: ``clearCache()`` leaves it valid (checkpoint
+    blocks are not SQL-cache entries); ``release_session_blocks``
+    unpersists them, and executing the plan afterwards raises rather
+    than silently recomputing the source."""
+    from agol_pandas_spark.session import release_session_blocks
+
+    target = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    source = spark.createDataFrame([(2, "B"), (3, "C")], "k long, v string")
+    expected = [(1, "a"), (2, "B"), (3, "C")]
+
+    out = merge(target, source, "upsert", key="k")
+    spark.catalog.clearCache()
+    assert sorted(tuple(r) for r in out.collect()) == expected
+
+    out = merge(target, source, "upsert", key="k")
+    release_session_blocks(spark)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        out.collect()
+    # rebuilding the merge is the documented remedy
+    rebuilt = merge(target, source, "upsert", key="k")
+    assert sorted(tuple(r) for r in rebuilt.collect()) == expected

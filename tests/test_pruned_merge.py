@@ -9,6 +9,7 @@ bit-identical to the full-rewrite path for every mode.
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -309,33 +310,60 @@ def test_zorder_layout_makes_pruning_bite(spark, tmp_path):
     assert sorted(map(tuple, cat.table("c").collect())) == expected
 
 
-def test_touched_paths_grid_matches_bruteforce(spark):
-    """The grid-binned equi-join touch-test must reproduce the plain
-    range-predicate decision exactly — including negative keys (floor
-    semantics), single-key files, and files forced dirty by the
-    cell-cap."""
+#: key types the touch test prunes on (merge._PRUNE_SAFE_TYPES), each with
+#: an order-preserving map from the int keys below to that type's values,
+#: and the wide-span bound and out-of-span key that fit the type
+_TOUCH_KEY_TYPES = {
+    "byte": ("ByteType", lambda k: k, 120, 100),
+    "short": ("ShortType", lambda k: k, 10000, 400),
+    "int": ("IntegerType", lambda k: k, 10000, 400),
+    "long": ("LongType", lambda k: k, 10000, 400),
+    "string": ("StringType", lambda k: f"{k + 20000:06d}", 10000, 400),
+    "date": (
+        "DateType",
+        lambda k: datetime.date(2000, 1, 1) + datetime.timedelta(days=k),
+        10000,
+        400,
+    ),
+}
+
+
+@pytest.mark.parametrize("key_type", list(_TOUCH_KEY_TYPES))
+def test_touched_paths_grid_matches_bruteforce(spark, key_type):
+    """The touch test must reproduce the plain range-predicate decision
+    exactly for every prunable key type — including negative keys
+    (floor semantics on the integral grid), single-key files, and files
+    forced dirty by the cell-cap. Integral keys take the grid-binned
+    equi-join, string and date keys the broadcast range join; both
+    broadcast a span table built on the driver."""
     import importlib
 
     from pyspark.sql import types as T
 
     M = importlib.import_module("agol_pandas_spark.operators.merge")
+    type_name, conv, wide, far = _TOUCH_KEY_TYPES[key_type]
+    dtype = getattr(T, type_name)()
 
-    spans = [
-        {"path": "a", "ok": True, "min": {"k": -50}, "max": {"k": -10}},
-        {"path": "b", "ok": True, "min": {"k": -9}, "max": {"k": 0}},
-        {"path": "c", "ok": True, "min": {"k": 1}, "max": {"k": 1}},
-        {"path": "d", "ok": True, "min": {"k": 5}, "max": {"k": 30}},
+    bounds = {
+        "a": (-50, -10),
+        "b": (-9, 0),
+        "c": (1, 1),
+        "d": (5, 30),
         # degenerate wide span: forced dirty through the cell cap when
         # g is small relative to its width
-        {"path": "e", "ok": True, "min": {"k": -10000}, "max": {"k": 10000}},
+        "e": (-wide, wide),
+    }
+    spans = [
+        {"path": p, "ok": True, "min": {"k": conv(lo)}, "max": {"k": conv(hi)}}
+        for p, (lo, hi) in bounds.items()
     ]
-    keys = [-50, -10, -5, 0, 1, 2, 17, 400]
-    src = spark.createDataFrame([(k,) for k in keys], "k long")
-    got = M._touched_paths(src, spans, ["k"], {"k": T.LongType()})
+    keys = [-50, -10, -5, 0, 1, 2, 17, far]
+    src = spark.createDataFrame(
+        [(conv(k),) for k in keys], T.StructType([T.StructField("k", dtype)])
+    )
+    got = M._touched_paths(src, spans, ["k"], {"k": dtype})
     brute = {
-        s["path"]
-        for s in spans
-        if any(s["min"]["k"] <= k <= s["max"]["k"] for k in keys)
+        p for p, (lo, hi) in bounds.items() if any(lo <= k <= hi for k in keys)
     }
     # the cap may only ADD files (conservative), never miss one
     assert brute - got == set()
